@@ -1256,20 +1256,10 @@ def _doc_surprisal(
         cached = _SURPRISAL_CACHE.get((session_token(spark), sf_dir))
         if cached is not None:
             return cached
-    toks = F.split("text", " ")
+    from presto_cached_examples_spark.llm.text import bigram_model_counts, bigram_pairs
+
     doc_big = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.struct(
-                        F.element_at(toks, i).alias("w1"),
-                        F.element_at(toks, i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("bg"),
-        )
+        d.select("doc_id", F.explode(bigram_pairs(F.split("text", " "))).alias("bg"))
         .select("doc_id", "bg.w1", "bg.w2")
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("k"))
@@ -1279,8 +1269,6 @@ def _doc_surprisal(
         # full-corpus call: share the |V|^2 model table session-wide;
         # on a cold cache the rollup of the already-needed doc_big
         # relation builds it (no extra corpus pass).
-        from presto_cached_examples_spark.llm.text import bigram_model_counts
-
         bc = bigram_model_counts(
             spark,
             sf_dir,

@@ -31,6 +31,17 @@ _PMI_CACHE: dict = {}
 _BIGRAM_BC_CACHE: dict = {}
 
 
+def bigram_pairs(tk):
+    """Array of (w1, w2) structs, one per pair of adjacent tokens in the
+    token array ``tk``. A document with fewer than 2 tokens yields an
+    empty array: both slices are empty, so no bigram and no error."""
+    return F.zip_with(
+        F.slice(tk, 1, F.size(tk) - 1),
+        F.slice(tk, 2, F.size(tk) - 1),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+
+
 def bigram_model_counts(spark, sf_dir, derive=None):
     """Session-memoized corpus bigram counts (w1, w2, n_big).
 
@@ -47,19 +58,8 @@ def bigram_model_counts(spark, sf_dir, derive=None):
             bc = derive()
         else:
             d = spread(load_table(spark, sf_dir, "documents"), spark)
-            toks = F.split("text", " ")
             bc = (
-                d.select(
-                    F.explode(
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(toks) - 1),
-                            lambda i: F.struct(
-                                F.element_at(toks, i).alias("w1"),
-                                F.element_at(toks, i + 1).alias("w2"),
-                            ),
-                        )
-                    ).alias("bg")
-                )
+                d.select(F.explode(bigram_pairs(F.split("text", " "))).alias("bg"))
                 .select("bg.w1", "bg.w2")
                 .groupBy("w1", "w2")
                 .agg(F.count(F.lit(1)).alias("n_big"))
@@ -867,15 +867,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines."""
     d = load_table(spark, sf_dir, "documents")
     tk = F.split("text", " ")
-    bigrams = d.select(
-        F.explode(
-            F.zip_with(
-                F.slice(tk, 1, F.size(tk) - 1),
-                F.slice(tk, 2, F.size(tk) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    bigrams = d.select(F.explode(bigram_pairs(tk)).alias("bg")).select("bg.w1", "bg.w2")
     bc = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_big"))
     toks = d.select("doc_id", F.explode(tk).alias("tok"))
     uni = (
@@ -1119,16 +1111,9 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No-op at production split counts.
     d = spread(load_table(spark, sf_dir, "documents"), spark)
     tk = F.split("text", " ")
-    bigrams = d.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(tk, 1, F.size(tk) - 1),
-                F.slice(tk, 2, F.size(tk) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select("doc_id", "bg.w1", "bg.w2")
+    bigrams = d.select("doc_id", F.explode(bigram_pairs(tk)).alias("bg")).select(
+        "doc_id", "bg.w1", "bg.w2"
+    )
     doc_big = bigrams.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).alias("k")
     )

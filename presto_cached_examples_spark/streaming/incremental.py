@@ -11,7 +11,9 @@ trades write volume vs correctness (:68-69,181-186).
 Spark-native translation: an incrementally-maintained grouped
 aggregate. Each new micro-batch is partially aggregated (touching only
 the *keys present in the batch* — the dirty rects), then merged with
-the running state by key; the result is published as a snapshot (C3).
+the running state by key; the merged state is materialized once, so
+the next merge starts from stored rows rather than replaying every
+earlier merge, and the result is published as a snapshot (C3).
 The CLEAR_TYPE knob maps to `strategy`: "incremental" merges deltas,
 "full" recomputes from all data seen — both must produce identical
 results (the C4 equivalence, tested in tests/test_streaming.py).
@@ -46,15 +48,20 @@ class IncrementalAggregator:
         self.keys = keys
         self.value_col = value_col
         self.publisher = SnapshotPublisher(spark, name)
+        # Lineage bound of the "full" strategy's history store; the
+        # merged state is cut on every update regardless.
         self.checkpoint_every = checkpoint_every
         self._state: DataFrame | None = None
-        # Raw-history store for the "full" strategy: a single running
-        # union, lineage-truncated every `checkpoint_every` updates —
-        # NOT a kept-forever list of batch plans. At cluster scale this
-        # is the append-only ingest table itself; localCheckpoint is
-        # the single-process analog of reading back the durable store.
+        # Raw-history store, kept for the "full" strategy only: a single
+        # running union, lineage-truncated every `checkpoint_every`
+        # updates — NOT a kept-forever list of batch plans. At cluster
+        # scale this is the append-only ingest table itself;
+        # localCheckpoint is the single-process analog of reading back
+        # the durable store. "incremental" never reads history.
         self._seen: DataFrame | None = None
-        self._n_updates = 0
+        # Fixed by the first update: an "incremental" aggregator keeps
+        # no history for "full" to recompute from.
+        self._strategy: str | None = None
 
     def _partial(self, df: DataFrame) -> DataFrame:
         v = F.col(self.value_col)
@@ -94,27 +101,39 @@ class IncrementalAggregator:
         strategy="incremental" — merge the batch's partial agg into
         state (dirty keys only). strategy="full" — recompute from the
         raw-history store (CLEAR_TYPE 2's memset-everything).
-        Identical results, different cost.
+        Identical results, different cost. The first update fixes the
+        strategy; a later update with the other one raises ValueError.
 
-        Lineage discipline: both the history store and the merged state
-        are localCheckpoint'ed every `checkpoint_every` updates, so plan
-        depth stays bounded no matter how many batches fold in — a
-        retired generation's recompute replays at most
-        `checkpoint_every` merges, never the whole chain."""
-        self._seen = batch if self._seen is None else self._seen.unionByName(batch)
-        if strategy == "full" or self._state is None:
-            if strategy == "incremental" and self._state is None:
-                new_state = self._partial(batch)
-            else:
-                new_state = self._partial(self._seen)
+        Lineage discipline: every merged state is materialized once
+        (eager localCheckpoint) before it is published, so the next
+        fold is one partial aggregate of the new batch plus one
+        full-outer join against a materialized generation — its cost
+        follows the batch, not the number of batches folded so far,
+        and no update replays earlier merges. `checkpoint_every`
+        bounds only the "full" strategy's history union."""
+        if strategy not in ("incremental", "full"):
+            raise ValueError(f"unknown strategy {strategy!r}")
+        if self._strategy is None:
+            self._strategy = strategy
+        elif strategy != self._strategy:
+            raise ValueError(
+                f"aggregator {self.publisher.name!r} folds with strategy "
+                f"{self._strategy!r}; cannot switch to {strategy!r}"
+            )
+        if strategy == "full":
+            self._seen = batch if self._seen is None else self._seen.unionByName(batch)
+            if (self.publisher.version + 1) % self.checkpoint_every == 0:
+                self._seen = self._seen.localCheckpoint(eager=True)
+            new_state = self._partial(self._seen)
+        elif self._state is None:
+            new_state = self._partial(batch)
         else:
             new_state = self._merge(self._state, self._partial(batch), self.keys)
-        self._n_updates += 1
-        if self._n_updates % self.checkpoint_every == 0:
-            new_state = new_state.localCheckpoint(eager=True)
-            self._seen = self._seen.localCheckpoint(eager=True)
-        self._state = new_state
-        return self.publisher.publish(self.result(new_state))
+        # Retired generations are not unpersisted here: a reader handle
+        # bound to one still scans its checkpoint once the snapshot
+        # cache is gone; Spark's cleaner drops it with the last handle.
+        self._state = new_state.localCheckpoint(eager=True)
+        return self.publisher.publish(self.result(self._state))
 
     def result(self, state: DataFrame | None = None) -> DataFrame:
         state = state if state is not None else self._state

@@ -106,8 +106,8 @@ def test_incremental_equals_full_refresh(spark, batches):
 
 def test_incremental_lineage_stays_bounded(spark):
     """50+ folded batches must not deepen the state's plan without
-    bound: localCheckpoint truncation every `checkpoint_every` updates
-    caps the explain-tree size, and results stay correct (sum over all
+    bound: the localCheckpoint cut of the merged state caps the
+    explain-tree size, and results stay correct (sum over all
     batches). Guards the retired-generation recompute cost (C4)."""
     from presto_cached_examples_spark.streaming.incremental import IncrementalAggregator
 
@@ -119,9 +119,9 @@ def test_incremental_lineage_stays_bounded(spark):
         df = spark.createDataFrame([("a", float(i)), ("b", 1.0)], "k string, v double")
         agg.update(df, strategy="incremental")
         sizes.append(len(agg._state._jdf.queryExecution().toString()))
-    # after a checkpoint the plan resets to a scan of the checkpoint RDD;
-    # max plan size across updates must stay near the within-cycle peak,
-    # not grow with total batch count
+    # after a cut the plan is a scan of the checkpoint RDD; max plan
+    # size across updates must stay near the first-cycle peak, not grow
+    # with total batch count
     peak_first_cycle = max(sizes[:8])
     assert max(sizes) <= peak_first_cycle * 2, (
         f"plan size grew unbounded: first-cycle peak {peak_first_cycle}, "

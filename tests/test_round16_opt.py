@@ -26,21 +26,12 @@ def test_bigram_model_builder_invariance(spark):
     whichever consumer builds it: the direct corpus aggregate (cold
     q_text_kn_bigram) and the doc-grain rollup (cold _doc_surprisal /
     q_text_bigram_lm) aggregate the same multiset of corpus bigrams."""
+    from presto_cached_examples_spark.llm.text import bigram_pairs
     from presto_cached_examples_spark.sources.catalog import load_table
 
     d = load_table(spark, SF_TINY, "documents")
-    toks = F.split("text", " ")
     grams = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.struct(
-                    F.element_at(toks, i).alias("w1"),
-                    F.element_at(toks, i + 1).alias("w2"),
-                ),
-            )
-        ).alias("bg"),
+        "doc_id", F.explode(bigram_pairs(F.split("text", " "))).alias("bg")
     ).select("doc_id", "bg.w1", "bg.w2")
     direct = (
         grams.groupBy("w1", "w2")
@@ -58,6 +49,48 @@ def test_bigram_model_builder_invariance(spark):
     )
     assert direct, "fixture produced no bigrams"
     assert direct == rollup
+
+
+def test_bigram_model_counts_on_short_documents(spark, tmp_path):
+    """Documents with fewer than 2 tokens have no bigrams. Both
+    derivations of the shared model table (the cold direct corpus
+    aggregate, and q_text_bigram_lm's doc-grain rollup) must give the
+    same (w1, w2) multiset as adjacent pairs of the split text, on 0-,
+    1- and n-token documents, without raising on the short ones."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from presto_cached_examples_spark.llm import text
+    from presto_cached_examples_spark.session import session_token
+
+    texts = [None, "", "solo", "a b", "a b a b c", "c a b"]
+    pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": "en",
+            "source": "web",
+            "n_chars": [len(t or "") for t in texts],
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
+    sf = str(tmp_path)
+    key = (session_token(spark), sf)
+    expected = Counter(
+        pair for t in texts if t is not None for pair in zip(t.split(" "), t.split(" ")[1:])
+    )
+
+    def model():
+        return Counter({(r.w1, r.w2): r.n_big for r in text.bigram_model_counts(spark, sf).collect()})
+
+    text._BIGRAM_BC_CACHE.pop(key, None)
+    direct = model()
+    text._BIGRAM_BC_CACHE.pop(key, None)
+    scored = text.q_text_bigram_lm(spark, sf).collect()  # builds the table by rollup
+    rollup = model()
+    text._BIGRAM_BC_CACHE.pop(key, None)
+    assert direct == rollup == expected
+    assert sorted(r.doc_id for r in scored) == [3, 4, 5]
 
 
 def test_bigram_memo_population_order_irrelevant(spark):

@@ -205,6 +205,103 @@ def test_incremental_equals_full(spark):
     one_shot.publisher.drop()
 
 
+def test_incremental_equals_full_across_checkpoints(spark):
+    """C4 equivalence over 8 batches with checkpoint_every=3, so the
+    "full" history is cut twice and every merge runs against a cut
+    state; compared after every batch."""
+    ev = load_table(spark, SF_TINY, "events").withColumn(
+        "b", F.pmod(F.xxhash64("event_id"), F.lit(8))
+    )
+    inc = IncrementalAggregator(spark, ["user_id", "event_type"], "value", "inc_ckpt", 3)
+    full = IncrementalAggregator(spark, ["user_id", "event_type"], "value", "full_ckpt", 3)
+    for b in range(8):
+        batch = ev.filter(F.col("b") == b).drop("b")
+        inc.update(batch, strategy="incremental")
+        full.update(batch, strategy="full")
+        assert _sorted_rows(inc.current()) == _sorted_rows(full.current()), f"after batch {b}"
+    inc.publisher.drop()
+    full.publisher.drop()
+
+
+def test_strategy_fixed_at_first_update(spark):
+    """An "incremental" aggregator keeps no history, so a later "full"
+    update must raise instead of recomputing from nothing; the reverse
+    switch, and an unknown strategy, raise too."""
+    df = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double")
+    for first, other in (("incremental", "full"), ("full", "incremental")):
+        agg = IncrementalAggregator(spark, ["k"], "v", f"fixed_{first}")
+        agg.update(df, strategy=first)
+        with pytest.raises(ValueError, match="cannot switch"):
+            agg.update(df, strategy=other)
+        assert agg.update(df, strategy=first) == 2  # the refused call published nothing
+        agg.publisher.drop()
+    with pytest.raises(ValueError, match="unknown strategy"):
+        IncrementalAggregator(spark, ["k"], "v", "fixed_bad").update(df, strategy="ful")
+
+
+def test_incremental_update_job_count_is_flat(spark):
+    """Each update folds one batch against a materialized state, so its
+    job count must not depend on how many batches came before or on
+    where the update falls in a `checkpoint_every` period. A state kept
+    as a lazy merge chain replays earlier merges and launches more jobs
+    the deeper the chain."""
+    sc = spark.sparkContext
+    agg = IncrementalAggregator(spark, ["k"], "v", "flat_cost", checkpoint_every=4)
+    jobs = []
+    for i in range(1, 10):
+        batch = spark.createDataFrame(
+            [("shared", float(i)), (f"new{i}", 1.0), (f"new{i}", 2.0)], "k string, v double"
+        )
+        group = f"flat_cost-{id(agg)}-{i}"
+        sc.setJobGroup(group, f"update {i}")
+        try:
+            agg.update(batch)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] > 0
+    assert jobs[1:] == [jobs[1]] * 8, f"jobs per update 1..9: {jobs}"
+    rows = {r.k: (r.n, r.sum_v) for r in agg.current().collect()}
+    assert rows["shared"] == (9, 45.0) and rows["new9"] == (2, 3.0)
+    agg.publisher.drop()
+
+
+def test_aggregator_reader_keeps_its_generation(spark):
+    """Snapshot isolation through the aggregator (C3 + C4): a current()
+    handle taken at generation 2 returns exactly generation 2's rows
+    after two more updates retired it, also once the collectors have
+    dropped every block nothing references."""
+    import gc
+    import time
+
+    agg = IncrementalAggregator(spark, ["k"], "v", "agg_isolation", checkpoint_every=2)
+
+    def batch(i):
+        return spark.createDataFrame([("a", float(i)), (f"k{i}", 10.0 * i)], "k string, v double")
+
+    agg.update(batch(1))
+    agg.update(batch(2))
+    handle = agg.current()
+    gen2 = [("a", 2, 3.0), ("k1", 1, 10.0), ("k2", 1, 20.0)]
+    agg.update(batch(3))
+    agg.update(batch(4))
+    jvm = spark.sparkContext._jvm
+    for _ in range(3):
+        gc.collect()
+        jvm.System.gc()
+        time.sleep(0.2)
+
+    def rows(df):
+        return sorted((r.k, r.n, r.sum_v) for r in df.collect())
+
+    assert rows(handle) == gen2
+    assert rows(agg.current()) == [
+        ("a", 4, 10.0), ("k1", 1, 10.0), ("k2", 1, 20.0), ("k3", 1, 30.0), ("k4", 1, 40.0)
+    ]
+    agg.publisher.drop()
+
+
 def test_observed_metrics(spark):
     from presto_cached_examples_spark.observability import StageTimer, observed
 
